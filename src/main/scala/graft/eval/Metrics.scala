@@ -82,11 +82,16 @@ object Metrics {
         avg(col("avg_similarity")).as("avg_similarity"),
         count(lit(1)).as("num_queries"))
 
-  /** R10 combined score + ranking (main.py:346-350). */
+  /** R10 combined score + ranking (main.py:346-350). The score is a sum
+    * of averages whose last bits follow shuffle order, so ranking uses
+    * it rounded well above double noise: configs that tie in value tie
+    * in rank and fall to the (strategy, model) tie-break.
+    */
   def ranked(perConfigMetrics: DataFrame): DataFrame =
     perConfigMetrics
       .withColumn("combined_score", col("top_3_accuracy") + col("mrr"))
-      .orderBy(col("combined_score").desc, col("strategy").asc, col("model").asc)
+      .orderBy(round(col("combined_score"), 9).desc, col("strategy").asc,
+        col("model").asc)
 
   /** R8 argmax by metric (evaluation.py:188-192). */
   def bestBy(perConfigMetrics: DataFrame, metric: String): DataFrame =

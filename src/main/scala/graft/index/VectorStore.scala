@@ -1,54 +1,47 @@
 package graft.index
 
+import java.io.File
+
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.search.{Knn, NnGraph}
+import graft.DirSwap
+import graft.search.{Ann, Knn, NnGraph}
 
-/** Per-collection graph-index state shared by every [[VectorStore]]
+/** Per-collection artifact state shared by every [[VectorStore]]
   * instance over the same path: the serving contract is PER COLLECTION
   * (the reference holds one Qdrant collection — one HNSW — per
   * strategy×model pair, src/vector_db.py:22-26), so artifacts key on
-  * (store path, collection) and maintenance on one collection can
-  * never touch another's graph.
+  * (store path, collection, kind) and maintenance on one collection can
+  * never touch another's.
   */
 object VectorStore {
-  // artifact memo: weakly session-keyed (FrameMemo — the DataFrame
-  // value must not pin the session), inner key = (basePath, collection)
-  private val graphMemo = new graft.FrameMemo[(String, String)]
+  /** One artifact: a sharded graph's `coll` is `<collection>#s<shards>`. */
+  private final case class ArtKey(base: String, coll: String, kind: String)
 
-  // trained-PQ codebook memo: plain driver arrays (no session pin),
-  // weakly session-keyed, inner key = (basePath, collection)
-  private val cwMemo =
-    new graft.SessionMemo[(String, String), Array[Array[Array[Float]]]]
+  // weakly session-keyed memos: frame-valued artifacts live in a
+  // FrameMemo (a DataFrame value must not pin the session); `held`
+  // records the identity each artifact was resolved at, plus the value
+  // itself for driver-side (array) artifacts
+  private val frames = new graft.FrameMemo[ArtKey]
+  private val held = new graft.SessionMemo[ArtKey, (String, AnyRef)]
 
-  // STALENESS GUARDS for cross-session mutation (the store path is
-  // shared state; a session's memo can outlive a mutation performed
-  // by ANOTHER session's store over the same path): the content stamp
-  // the memoized graph frame was resolved at, and the identity token
-  // the memoized codebooks were loaded/trained at — validated on every
-  // lookup against the path's CURRENT state (a driver listing / one
-  // small file read), dropping the stale entry instead of serving it
-  // (graph: a pruned artifact dir would otherwise throw forever;
-  // codebooks: a recreated dataset would otherwise be scored with the
-  // old quantizer, silently).
-  private val graphStampMemo = new graft.SessionMemo[(String, String), String]
-  private val cwTokenMemo = new graft.SessionMemo[(String, String), String]
-
-  // TRAIN census per (store, collection) — the spec hook proving
-  // codebooks train once per collection lifetime (memo hits and
-  // cold-start loads must never bump it)
-  private val cwTrains = new java.util.concurrent.ConcurrentHashMap[
-    (String, String), java.util.concurrent.atomic.AtomicLong]
-  private def bumpTrain(key: (String, String)): Unit = {
-    cwTrains.computeIfAbsent(key,
-      _ => new java.util.concurrent.atomic.AtomicLong)
-      .incrementAndGet(): Unit
-  }
-  private[graft] def cwTrainsOf(base: String, name: String): Long = {
-    val c = cwTrains.get((base, name))
-    if (c == null) 0L else c.get()
-  }
+  // BUILD census — full graph builds, codebook/centroid trainings, code
+  // encodes; memo hits, cold loads and maintenance never bump it
+  private val builds = new java.util.concurrent.ConcurrentHashMap[
+    ArtKey, java.util.concurrent.atomic.AtomicLong]
+  private def builtOf(base: String, coll: String, kind: String): Long =
+    Option(builds.get(ArtKey(base, coll, kind))).fold(0L)(_.get)
+  private[graft] def graphBuildsOf(base: String, name: String): Long =
+    builtOf(base, name, "graph")
+  private[graft] def cwTrainsOf(base: String, name: String): Long =
+    builtOf(base, name, "pq")
+  private[graft] def ivfTrainsOf(base: String, name: String): Long =
+    builtOf(base, name, "ivf")
+  private[graft] def codesEncodesOf(base: String, name: String): Long =
+    builtOf(base, name, "codes")
 
   // PQ parameters — the quantizer family's production rung (m=8
   // subspaces, 16 codes, 2 Lloyd iterations — the ann_pq_trained
@@ -63,60 +56,6 @@ object VectorStore {
   val IvfIters = 2
   val IvfNprobe = 4
 
-  // trained-IVF centroid memo + identity token + train census — the
-  // codebooksOf discipline applied to the coarse quantizer (VERDICT
-  // r19 #5: the .pq persistence covered PQ only; IVF centroids
-  // retrained per session)
-  private val ivfMemo =
-    new graft.SessionMemo[(String, String), Array[Array[Float]]]
-  private val ivfTokenMemo = new graft.SessionMemo[(String, String), String]
-  private val ivfTrains = new java.util.concurrent.ConcurrentHashMap[
-    (String, String), java.util.concurrent.atomic.AtomicLong]
-  private def bumpIvfTrain(key: (String, String)): Unit = {
-    ivfTrains.computeIfAbsent(key,
-      _ => new java.util.concurrent.atomic.AtomicLong)
-      .incrementAndGet(): Unit
-  }
-  private[graft] def ivfTrainsOf(base: String, name: String): Long = {
-    val c = ivfTrains.get((base, name))
-    if (c == null) 0L else c.get()
-  }
-
-  // per-collection PQ CODE-ROW artifact memo + encode census (the
-  // ColBERT/PLAID compressed token index as store state — VERDICT r19
-  // #6): codes derive from BOTH the collection contents and the
-  // trained codebooks, so their artifact dir is stamped with both
-  // identities and any mutation re-encodes
-  private val codesMemo = new graft.FrameMemo[(String, String)]
-  private val codesStampMemo = new graft.SessionMemo[(String, String), String]
-  private val codesEncodes = new java.util.concurrent.ConcurrentHashMap[
-    (String, String), java.util.concurrent.atomic.AtomicLong]
-  private def bumpEncode(key: (String, String)): Unit = {
-    codesEncodes.computeIfAbsent(key,
-      _ => new java.util.concurrent.atomic.AtomicLong)
-      .incrementAndGet(): Unit
-  }
-  private[graft] def codesEncodesOf(base: String, name: String): Long = {
-    val c = codesEncodes.get((base, name))
-    if (c == null) 0L else c.get()
-  }
-
-  // FULL-build census per (store, collection) — the spec hook proving
-  // upsert/delete maintain incrementally: maintenance must never bump
-  // a collection's count, and collection A's maintenance must never
-  // bump B's
-  private val graphBuilds = new java.util.concurrent.ConcurrentHashMap[
-    (String, String), java.util.concurrent.atomic.AtomicLong]
-  private def bump(key: (String, String)): Unit = {
-    graphBuilds.computeIfAbsent(key,
-      _ => new java.util.concurrent.atomic.AtomicLong)
-      .incrementAndGet(): Unit
-  }
-  private[graft] def graphBuildsOf(base: String, name: String): Long = {
-    val c = graphBuilds.get((base, name))
-    if (c == null) 0L else c.get()
-  }
-
   // graph parameters — the graph family's production rung (NN-descent
   // k=10 over 3 rounds, beam 16 over 4 rounds, 16 md5-ranked seeds)
   val GraphK = 10
@@ -129,6 +68,12 @@ object VectorStore {
   // compressed gather (the Qdrant oversampling / Faiss k_factor
   // convention — the retrieve_maxsim_pq rung)
   val MaxsimCandTok = 16
+
+  /** Artifact format version — bumped if the edge schema or build
+    * parameters ever change shape, so an old artifact can't serve a
+    * new reader.
+    */
+  private val GraphArtifactVersion = 1
 }
 
 /** Partitioned-parquet vector store — the Spark restatement of the
@@ -145,9 +90,20 @@ object VectorStore {
   * LSH-bucketed join (approximate, see Knn).
   */
 class VectorStore(spark: SparkSession, basePath: String) {
+  import VectorStore._
+
+  // finish or roll back any collection swap a crash interrupted
+  Option(new File(basePath).list()).getOrElse(Array.empty)
+    .filter(n => n.startsWith(".collection=") &&
+      (n.endsWith("-new") || n.endsWith("-old")))
+    .map(_.drop(".collection=".length).dropRight(4)).distinct
+    .foreach(c => DirSwap.recover(liveDir(c), freshDir(c)))
 
   private def table: DataFrame = spark.read
     .option("basePath", basePath).parquet(s"$basePath/collection=*")
+
+  private def liveDir(name: String) = new File(s"$basePath/collection=$name")
+  private def freshDir(name: String) = new File(s"$basePath/.collection=$name-new")
 
   /** V1+V2: (re)create a collection from rows carrying an `embedding`
     * column plus payload columns; ids 0..n-1 follow `orderCol` order
@@ -160,6 +116,7 @@ class VectorStore(spark: SparkSession, basePath: String) {
     * enumerate() semantics, no single-partition exchange.
     */
   def createCollection(name: String, rows: DataFrame, orderCol: String): Unit = {
+    DirSwap.recover(liveDir(name), freshDir(name))
     val sorted = rows.orderBy(col(orderCol))
     val schema = org.apache.spark.sql.types.StructType(
       sorted.schema.fields :+
@@ -170,39 +127,23 @@ class VectorStore(spark: SparkSession, basePath: String) {
     }
     spark.createDataFrame(withId, schema)
       .write.mode("overwrite")
-      .parquet(s"$basePath/collection=$name")
-    // recreate-on-exists semantics: a replaced dataset invalidates any
-    // memoized graph artifact AND any persisted one (the stamp would
-    // already refuse to serve it; deleting reclaims the space) — the
-    // next graphSearch rebuilds fresh. Trained codebooks are dataset
-    // artifacts too: a recreate retrains (unlike upsert/delete, which
-    // keep them — the Faiss train-once contract).
+      .parquet(liveDir(name).toString)
+    // recreate-on-exists semantics: a replaced dataset invalidates every
+    // artifact (unlike upsert/delete, which keep the trained quantizers
+    // — the Faiss train-once contract)
     dropAllArtifacts(name)
   }
 
-  /** Drop EVERY per-collection artifact + session memo — graph, PQ
-    * codebooks, IVF centroids, code rows. The ONE invalidation path a
-    * recreate and a collection drop share: a new artifact class added
-    * here is invalidated everywhere, instead of being remembered at
-    * each call site (a missed site would leave a recreate serving a
-    * stale artifact class silently).
+  /** Drop EVERY per-collection artifact, persisted and memoized — the
+    * ONE invalidation path a recreate and a collection drop share.
+    * Other sessions' memos fall to the identity guard on next lookup.
     */
   private def dropAllArtifacts(name: String): Unit = {
-    VectorStore.graphMemo.drop(spark, gkey(name))
-    VectorStore.graphStampMemo.entries(spark).remove(gkey(name))
-    val gRoot = graphRoot(name)
-    if (gRoot.exists) rmTree(gRoot)
-    VectorStore.cwMemo.entries(spark).remove(gkey(name))
-    VectorStore.cwTokenMemo.entries(spark).remove(gkey(name))
-    val pqDir = new java.io.File(s"$basePath/.pq/$name")
-    if (pqDir.exists) rmTree(pqDir)
-    VectorStore.ivfMemo.entries(spark).remove(gkey(name))
-    VectorStore.ivfTokenMemo.entries(spark).remove(gkey(name))
-    val ivfDir = new java.io.File(s"$basePath/.ivf/$name")
-    if (ivfDir.exists) rmTree(ivfDir)
-    VectorStore.codesMemo.drop(spark, gkey(name))
-    VectorStore.codesStampMemo.entries(spark).remove(gkey(name))
-    if (codesRoot(name).exists) rmTree(codesRoot(name))
+    held.entries(spark).keySet.asScala
+      .filter(k => k.base == basePath &&
+        (k.coll == name || k.coll.startsWith(s"$name#s")))
+      .foreach { k => held.entries(spark).remove(k); frames.drop(spark, k) }
+    Seq(graph, codebooks, centroids, codes).foreach(a => DirSwap.rmTree(a.root(name)))
   }
 
   /** V3: exact cosine top-k within one collection (vector_db.py:93-119). */
@@ -210,47 +151,17 @@ class VectorStore(spark: SparkSession, basePath: String) {
     Knn.bruteForceTopK(read(collection), queries, k, idCol = "id")
       .withColumnRenamed("vec_id", "id")
 
-  private def gkey(name: String): (String, String) = (basePath, name)
-
   private def asIndex(df: DataFrame): DataFrame =
     df.select(col("id").as("vec_id"), col("embedding"))
 
-  // ---- persisted graph artifacts (cold-start serving) ----------------
-  //
-  // The graph artifact is DURABLE STORE STATE, not session scratch: it
-  // lives under `basePath/.graph/<collection>/` beside the data it
-  // indexes — the Qdrant contract (the reference's QdrantClient(path=…)
-  // persists its HNSW inside the collection directory and serves it on
-  // reopen, src/vector_db.py:35; Faiss write_index/read_index is the
-  // same shape) — so a NEW session over the same path serves
-  // graphSearch with ZERO rebuilds (VERDICT r18 #1). The dot-prefixed
-  // dir is invisible to both the `collection=*` data glob and
-  // collectionNames().
-  //
-  // Staleness guard: the artifact dir name embeds a CONTENT STAMP —
-  // md5 over the collection's sorted (file name, length) listing, the
-  // same evidence Spark's own file index keys on. Every data mutation
-  // here goes through write-to-temp + atomic dir swap, which mints
-  // fresh part-file names, so ANY dataset change (recreate, upsert,
-  // delete, even an out-of-band rewrite) changes the stamp and a stale
-  // artifact can never resolve for the new data — load falls back to a
-  // fresh build. Listing is driver-side metadata only (no scan): at
-  // 100 TB it costs exactly what planning a query over the collection
-  // already costs.
-
-  /** Artifact format version — bumped if the edge schema or build
-    * parameters ever change shape, so an old artifact can't serve a
-    * new reader.
+  /** Content stamp of the collection's current file layout — md5 over
+    * the sorted (file name, length) listing, the evidence Spark's own
+    * file index keys on. Every data mutation here mints fresh part-file
+    * names, so ANY dataset change (recreate, upsert, delete, compact,
+    * even an out-of-band rewrite) changes it. Driver-side metadata only.
     */
-  private val GraphArtifactVersion = 1
-
-  private def graphRoot(name: String): java.io.File =
-    new java.io.File(s"$basePath/.graph/$name")
-
-  /** Content stamp of the collection's current file layout. */
   private def collStamp(name: String): String = {
-    val dir = new java.io.File(s"$basePath/collection=$name")
-    val listing = Option(dir.listFiles()).getOrElse(Array.empty)
+    val listing = Option(liveDir(name).listFiles()).getOrElse(Array.empty)
       .filter(f => f.isFile && !f.getName.startsWith(".") &&
         !f.getName.startsWith("_"))
       .map(f => f.getName + ":" + f.length).sorted.mkString("|")
@@ -259,88 +170,230 @@ class VectorStore(spark: SparkSession, basePath: String) {
       .map(b => f"$b%02x").mkString.take(16)
   }
 
-  // artifact-dir prefixes: the monolithic graph and each shard-count
-  // variant coexist under graphRoot — pruning is PREFIX-scoped so
-  // maintaining one never reclaims the other
-  private def monoPrefix: String = s"v$GraphArtifactVersion-"
-  private def shardPrefix(numShards: Int): String =
-    s"v${GraphArtifactVersion}s$numShards-"
+  // ---- the artifact lifecycle ----------------------------------------
 
-  private def stampDir(name: String): String =
-    new java.io.File(graphRoot(name),
-      monoPrefix + collStamp(name)).toString
-
-  private def shardedStampDir(name: String, numShards: Int): String =
-    new java.io.File(graphRoot(name),
-      shardPrefix(numShards) + collStamp(name)).toString
-
-  /** The persisted artifact for the collection's CURRENT contents —
-    * None when absent, half-written (no _SUCCESS), or stamped for a
-    * different dataset version.
+  /** One per-collection artifact kind — graph, sharded graph, PQ
+    * codebooks, IVF centroids, PQ code rows — and the ONE lifecycle all
+    * of them share. Artifacts are DURABLE STORE STATE beside the data
+    * they index, under `basePath/.<kind dir>/<collection>/` (dot-
+    * prefixed: invisible to the `collection=*` glob and to
+    * [[collectionNames]]) — the Qdrant contract (QdrantClient(path=…)
+    * persists its HNSW and serves it on reopen, src/vector_db.py:35;
+    * Faiss write_index/read_index is the same shape).
+    *
+    *  - Key: (store path, collection, kind); a sharded graph's
+    *    collection is `<name>#s<shards>`, so shard counts are
+    *    independent artifacts.
+    *  - Identity: what a persisted copy must carry to serve the
+    *    collection as it is NOW. Derived artifacts (graphs, code rows)
+    *    use the content stamp in their dir name, so any data mutation
+    *    retires them; trained quantizers (codebooks, centroids) use a
+    *    `_token` written after their parquet commit, so they survive
+    *    upserts/deletes (Faiss trains once and add()s forever). A
+    *    missing token is the crash window between the two writes and
+    *    means no valid copy.
+    *  - Load: the persisted copy at the current identity, if complete
+    *    (`_SUCCESS`) — a fresh session serves with ZERO builds.
+    *  - Build once: otherwise build from the collection's rows, persist
+    *    at the store path, and bump the build census (the spec hook:
+    *    memo hits, cold loads and maintenance never bump it).
+    *  - Staleness guard: the session memo keeps the identity the value
+    *    was resolved at and serves it only while the disk still carries
+    *    that identity — another session's mutation or recreate (which
+    *    prunes the files a memoized frame scans, or retrains the
+    *    quantizer) forces a reload, never a stale or failing serve.
+    *  - Invalidation: a recreate or drop deletes every kind's root
+    *    ([[dropAllArtifacts]]).
+    *  - Maintenance: point upsert/delete and compact carry every graph
+    *    artifact across the data swap incrementally ([[rewrite]]) and
+    *    persist it under the post-mutation stamp; code rows re-encode
+    *    on next use.
     */
-  private def loadPersistedGraph(name: String): Option[DataFrame] = {
-    val dir = new java.io.File(stampDir(name))
-    if (new java.io.File(dir, "_SUCCESS").isFile)
-      Some(spark.read.parquet(dir.toString))
-    else None
-  }
+  private abstract class Artifact[V <: AnyRef](kind: String, dirName: String) {
+    def root(name: String): File = new File(s"$basePath/$dirName/$name")
+    protected def coll(name: String): String = name
+    final def key(name: String): ArtKey = ArtKey(basePath, coll(name), kind)
 
-  private def rmTree(f: java.io.File): Unit = {
-    if (f.isDirectory) f.listFiles.foreach(rmTree)
-    f.delete(): Unit
-  }
+    /** Identity a persisted copy must carry to serve the collection now. */
+    def identity(name: String): Option[String]
+    /** The complete persisted copy at identity `id`, if any. */
+    def load(name: String, id: String): Option[V]
+    /** Build from the collection's rows and persist; returns the
+      * identity persisted with the value.
+      */
+    protected def build(name: String, id: Option[String]): (String, V)
 
-  /** Drop every persisted artifact with dir-name prefix `prefix`
-    * EXCEPT `keep` (superseded stamps are garbage once the current one
-    * is written) — prefix-scoped so the monolithic path's maintenance
-    * never reclaims a sharded variant's artifact or vice versa. A
-    * `keep = None` with the bare version prefix ("v") drops them all
-    * (the recreate path; [[dropAllArtifacts]] removes the root anyway).
-    */
-  private def pruneGraphDirs(name: String, keep: Option[String],
-      prefix: String): Unit = {
-    val kids = Option(graphRoot(name).listFiles()).getOrElse(Array.empty)
-    kids.filter(d => d.getName.startsWith(prefix) &&
-        !keep.contains(d.toString))
-      .foreach(rmTree)
-  }
+    // session value storage: driver-side values ride in `held`
+    protected def recall(k: ArtKey, value: AnyRef): Option[V] =
+      Some(value.asInstanceOf[V])
+    protected def remember(k: ArtKey, v: V): AnyRef = v
 
-  /** The collection's NN-descent graph artifact: loaded from the
-    * store's persisted copy when one matches the collection's current
-    * content stamp (cold-start serving — a fresh session over the same
-    * path pays ZERO builds), full-built on first-ever use (ONE build
-    * per collection lifetime — [[VectorStore.graphBuildsOf]] counts
-    * them, and the build lands directly under the store path), then
-    * kept current INCREMENTALLY by [[upsertPoints]]/[[deletePoints]]
-    * (HNSW insert/delete, never a rebuild — each maintenance pass
-    * writes the updated artifact back under the post-mutation stamp).
-    * Keyed (store path, collection): maintenance on one collection
-    * cannot touch another's artifact.
-    */
-  def graphOf(name: String): DataFrame = {
-    val key = gkey(name)
-    val cur = collStamp(name)
-    // cross-session staleness guard: another store over this path may
-    // have mutated the collection (pruning the artifact dir this
-    // session's memoized frame scans) — a memo resolved at a different
-    // stamp is dropped, never served
-    val recorded = VectorStore.graphStampMemo.entries(spark).get(key)
-    if (recorded != null && recorded != cur)
-      VectorStore.graphMemo.drop(spark, key)
-    val g = VectorStore.graphMemo.computeIfAbsent(spark, key) {
-      loadPersistedGraph(name).getOrElse {
-        VectorStore.bump(key)
-        val dir = stampDir(name)
-        val built = NnGraph.buildGraph(asIndex(read(name)),
-          VectorStore.GraphK, VectorStore.NndIters, VectorStore.NndSample,
-          artifactDir = Some(dir))
-        pruneGraphDirs(name, keep = Some(dir), prefix = monoPrefix)
-        built
+    final def commit(name: String, id: String, v: V): Unit = {
+      val k = key(name)
+      held.entries(spark).put(k, (id, remember(k, v))): Unit
+    }
+
+    /** The value for identity `id`: this session's if resolved at
+      * `id`, else the persisted copy — never builds.
+      */
+    final def current(name: String, id: String): Option[V] = {
+      val k = key(name)
+      Option(held.entries(spark).get(k)).filter(_._1 == id)
+        .flatMap(h => recall(k, h._2))
+        .orElse(load(name, id).map { v => commit(name, id, v); v })
+    }
+
+    final def of(name: String): V = {
+      val id = identity(name)
+      id.flatMap(current(name, _)).getOrElse {
+        val k = key(name)
+        builds.computeIfAbsent(k,
+          _ => new java.util.concurrent.atomic.AtomicLong).incrementAndGet()
+        val (built, v) = build(name, id)
+        commit(name, built, v)
+        v
       }
     }
-    VectorStore.graphStampMemo.entries(spark).put(key, cur): Unit
-    g
   }
+
+  /** Frame artifacts stamped by content: persisted at
+    * `root/<prefix><identity>/`; prefix-scoped pruning lets variants
+    * (the monolithic graph, each shard count) coexist under one root.
+    */
+  private abstract class Stamped(kind: String, dirName: String, prefix: String)
+      extends Artifact[DataFrame](kind, dirName) {
+    def dir(name: String, id: String): File = new File(root(name), prefix + id)
+    /** Build into `dir`; returns the frame serving the written copy. */
+    protected def write(name: String, dir: String): DataFrame
+
+    def load(name: String, id: String): Option[DataFrame] = {
+      val d = dir(name, id)
+      if (new File(d, "_SUCCESS").isFile) Some(spark.read.parquet(d.toString))
+      else None
+    }
+    protected def build(name: String, id: Option[String]): (String, DataFrame) = {
+      val v = write(name, dir(name, id.get).toString)
+      pruneExcept(name, id.get)
+      (id.get, v)
+    }
+
+    /** Drop every persisted copy of this variant but the one at `id`. */
+    def pruneExcept(name: String, id: String): Unit =
+      Option(root(name).listFiles()).getOrElse(Array.empty)
+        .filter(d => d.getName.startsWith(prefix) && d != dir(name, id))
+        .foreach(DirSwap.rmTree)
+
+    override protected def recall(k: ArtKey, value: AnyRef) = frames.peek(spark, k)
+    override protected def remember(k: ArtKey, v: DataFrame): AnyRef = {
+      frames.put(spark, k)(v); null
+    }
+  }
+
+  /** The NN-descent graph: monolithic, or `shards` independent in-shard
+    * graphs (edges never cross a vec_id-mod-shards boundary).
+    */
+  private class Graph(shards: Option[Int]) extends Stamped("graph", ".graph",
+      s"v$GraphArtifactVersion${shards.fold("")(s => s"s$s")}-") {
+    override protected def coll(name: String) = name + shards.fold("")(s => s"#s$s")
+    def identity(name: String) = Some(collStamp(name))
+    protected def write(name: String, dir: String) = shards match {
+      case None => NnGraph.buildGraph(asIndex(read(name)), GraphK, NndIters,
+        NndSample, artifactDir = Some(dir))
+      case Some(s) => NnGraph.buildShardedGraph(asIndex(read(name)), s, GraphK,
+        NndIters, NndSample, artifactDir = Some(dir))
+    }
+    /** Search-then-connect `rows` into `g` (in-shard for a sharded graph). */
+    def insert(base: DataFrame, g: DataFrame, rows: DataFrame, dir: String) =
+      shards match {
+        case None => NnGraph.insertIntoGraph(base, g, rows, GraphK, BeamWidth,
+          BeamIters, NndSample, artifactDir = Some(dir))
+        case Some(s) => NnGraph.insertIntoShardedGraph(base, g, rows, s, GraphK,
+          BeamWidth, BeamIters, NndSample, artifactDir = Some(dir))
+      }
+  }
+  private val graph = new Graph(None)
+
+  /** Trained driver-side quantizers at `root/v1/`, identified by `_token`. */
+  private abstract class Trained[V <: AnyRef](kind: String, dirName: String)
+      extends Artifact[V](kind, dirName) {
+    private def dir(name: String) = new File(root(name), "v1")
+    protected def train(index: DataFrame): V
+    protected def encode(v: V): DataFrame
+    protected def decode(rows: DataFrame): Option[V]
+
+    def identity(name: String): Option[String] = {
+      val f = new File(dir(name), "_token")
+      if (f.isFile)
+        Some(new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8"))
+      else None
+    }
+    def load(name: String, id: String): Option[V] =
+      if (new File(dir(name), "_SUCCESS").isFile)
+        decode(spark.read.parquet(dir(name).toString))
+      else None
+    protected def build(name: String, id: Option[String]): (String, V) = {
+      val v = train(asIndex(read(name)))
+      encode(v).coalesce(1).write.mode("overwrite").parquet(dir(name).toString)
+      val token = java.util.UUID.randomUUID().toString
+      java.nio.file.Files.write(new File(dir(name), "_token").toPath,
+        token.getBytes("UTF-8"))
+      (token, v)
+    }
+  }
+
+  private val codebooks = new Trained[Array[Array[Array[Float]]]]("pq", ".pq") {
+    import spark.implicits._
+    protected def train(index: DataFrame) =
+      Ann.trainPqCodebooks(index, PqM, PqCodes, PqIters)
+    protected def encode(cw: Array[Array[Array[Float]]]) =
+      (for (j <- cw.indices; c <- cw(j).indices) yield (j, c, cw(j)(c).toSeq))
+        .toDF("j", "code", "cw")
+    protected def decode(df: DataFrame) = {
+      val rows = df.select(col("j"), col("code"), col("cw"))
+        .as[(Int, Int, Array[Float])].collect()
+      if (rows.isEmpty) None
+      else Some(Array.tabulate(rows.map(_._1).max + 1) { j =>
+        rows.filter(_._1 == j).sortBy(_._2).map(_._3)
+      })
+    }
+  }
+
+  private val centroids = new Trained[Array[Array[Float]]]("ivf", ".ivf") {
+    import spark.implicits._
+    protected def train(index: DataFrame) =
+      Ann.trainCentroids(index, IvfCells, IvfIters).orderBy(col("cent_id"))
+        .select(col("cvec")).as[Array[Float]].collect()
+    protected def encode(cents: Array[Array[Float]]) =
+      cents.zipWithIndex.map { case (v, i) => (i.toLong, v.toSeq) }
+        .toSeq.toDF("cent_id", "cvec")
+    protected def decode(df: DataFrame) = {
+      val rows = df.select(col("cent_id"), col("cvec"))
+        .as[(Long, Array[Float])].collect()
+      if (rows.isEmpty) None else Some(rows.sortBy(_._1).map(_._2))
+    }
+  }
+
+  /** PQ code rows derive from the contents AND the trained codebooks,
+    * so their stamp carries both identities.
+    */
+  private val codes = new Stamped("codes", ".codes", "v1-") {
+    def identity(name: String) = Some(collStamp(name) + "-" +
+      codebooks.identity(name).map(_.take(8)).getOrElse("none"))
+    protected def write(name: String, dir: String) = {
+      Ann.pqEncodeFrame(asIndex(read(name)), PqM, codebooksOf(name))
+        .write.mode("overwrite").parquet(dir)
+      spark.read.parquet(dir)
+    }
+  }
+
+  // ---- artifact accessors + serves ----------------------------------
+
+  /** The collection's NN-descent graph artifact (the [[Artifact]]
+    * lifecycle: one build per collection lifetime —
+    * [[VectorStore.graphBuildsOf]] counts them — kept current
+    * incrementally by [[upsertPoints]]/[[deletePoints]]).
+    */
+  def graphOf(name: String): DataFrame = graph.of(name)
 
   /** V3's graph-index path: beam search over THIS collection's
     * artifact — the per-collection serving contract of the reference's
@@ -349,344 +402,65 @@ class VectorStore(spark: SparkSession, basePath: String) {
     */
   def graphSearch(name: String, queries: DataFrame, k: Int): DataFrame =
     NnGraph.graphTopK(asIndex(read(name)), graphOf(name), queries, k,
-        VectorStore.BeamWidth, VectorStore.BeamIters, VectorStore.NndSample)
+        BeamWidth, BeamIters, NndSample)
       .withColumnRenamed("vec_id", "id")
 
-  // ---- SHARDED graph artifacts: the 100 TB collection --------------
-  //
-  // The monolithic graphOf path builds ONE graph per collection — one
-  // job chain whose cost grows with the collection, the design
-  // question a 100 TB collection forces. shardedGraphOf brings the
-  // NnGraph sharded family to the store with the FULL artifact
-  // contract: per-shard-count stamped dirs beside the monolithic ones
-  // (prefix-scoped pruning keeps them independent), load-before-build,
-  // cross-session stamp guards, and INCREMENTAL maintenance —
-  // upsert/delete repair each shard's graph in place (delete via the
-  // shard-preserving tombstone/bridge, insert via the shard-restricted
-  // walk — NnGraph.insertIntoShardedGraph), never a rebuild.
-
-  private def skey(name: String, numShards: Int): (String, String) =
-    (basePath, s"$name#s$numShards")
-
-  private def loadPersistedSharded(name: String,
-      numShards: Int): Option[DataFrame] = {
-    val dir = new java.io.File(shardedStampDir(name, numShards))
-    if (new java.io.File(dir, "_SUCCESS").isFile)
-      Some(spark.read.parquet(dir.toString))
-    else None
-  }
-
-  /** The shard counts with a persisted artifact stamped for the
-    * CURRENT contents — what a mutation must maintain (the disk
-    * listing is authoritative: every sharded build/maintenance pass
-    * persists, so there is no memo-only sharded graph).
-    */
-  private def persistedShardCounts(name: String): Seq[Int] = {
-    val stamp = collStamp(name)
-    val re = (s"^v${GraphArtifactVersion}s(\\d+)-" +
-      java.util.regex.Pattern.quote(stamp) + "$").r
-    Option(graphRoot(name).listFiles()).getOrElse(Array.empty)
-      .flatMap(d => re.findFirstMatchIn(d.getName).map(_.group(1).toInt))
-      .toSeq.sorted
-  }
-
   /** The collection's SHARDED edge artifact for `numShards` — the
-    * graphOf lifecycle (load/build-once/maintain/stamp-guard) applied
-    * to the sharded family. Keyed (store path, collection, shard
-    * count): different shard counts are independent artifacts.
+    * 100 TB answer to one monolithic graph: build cost and artifact
+    * size split across independent shards, maintained in-shard.
     */
-  def shardedGraphOf(name: String, numShards: Int): DataFrame = {
-    val key = skey(name, numShards)
-    val cur = collStamp(name)
-    val recorded = VectorStore.graphStampMemo.entries(spark).get(key)
-    if (recorded != null && recorded != cur)
-      VectorStore.graphMemo.drop(spark, key)
-    val g = VectorStore.graphMemo.computeIfAbsent(spark, key) {
-      loadPersistedSharded(name, numShards).getOrElse {
-        VectorStore.bump(key)
-        val dir = shardedStampDir(name, numShards)
-        val built = NnGraph.buildShardedGraph(asIndex(read(name)),
-          numShards, VectorStore.GraphK, VectorStore.NndIters,
-          VectorStore.NndSample, artifactDir = Some(dir))
-        pruneGraphDirs(name, keep = Some(dir),
-          prefix = shardPrefix(numShards))
-        built
-      }
-    }
-    VectorStore.graphStampMemo.entries(spark).put(key, cur): Unit
-    g
-  }
+  def shardedGraphOf(name: String, numShards: Int): DataFrame =
+    new Graph(Some(numShards)).of(name)
 
   /** V3's sharded fan-out path: every query walks every shard of THIS
     * collection's sharded artifact and merges per-query top-k — the
-    * Faiss IndexShards serve as a store API, with build cost and
-    * artifact size split across independent shards at 100 TB.
+    * Faiss IndexShards serve as a store API.
     */
   def graphSearchSharded(name: String, queries: DataFrame, k: Int,
       numShards: Int = 2): DataFrame =
     NnGraph.shardedGraphTopK(asIndex(read(name)),
         shardedGraphOf(name, numShards), queries, k, numShards,
-        VectorStore.BeamWidth, VectorStore.BeamIters, VectorStore.NndSample)
+        BeamWidth, BeamIters, NndSample)
       .withColumnRenamed("vec_id", "id")
 
-  /** Sharded artifacts to MAINTAIN across a data mutation — the
-    * [[graphToMaintain]] contract per persisted shard count, looked up
-    * BEFORE the swap (pre-mutation stamp).
+  /** The collection's Lloyd-trained PQ codebooks — one training per
+    * collection lifetime ([[VectorStore.cwTrainsOf]] counts them).
     */
-  private def shardedToMaintain(name: String): Seq[(Int, DataFrame)] =
-    persistedShardCounts(name).flatMap { s =>
-      val key = skey(name, s)
-      val recorded = VectorStore.graphStampMemo.entries(spark).get(key)
-      if (recorded != null && recorded != collStamp(name))
-        VectorStore.graphMemo.drop(spark, key)
-      VectorStore.graphMemo.peek(spark, key)
-        .orElse(loadPersistedSharded(name, s))
-        .map(g => (s, g))
-    }
-
-  // ---- persisted per-collection PQ codebooks (VERDICT r18 #7) -------
-  //
-  // The quantizer is the store's OTHER trained artifact: codebooks key
-  // on (store path, collection) exactly like the graph, persist under
-  // `basePath/.pq/<collection>/v1/` for cold-start serving, and train
-  // at most once per collection lifetime. Unlike the graph they do NOT
-  // stamp-couple to the file layout: a trained product quantizer stays
-  // valid across upserts/deletes (Faiss trains once and add()s forever;
-  // retraining per ingest batch would thrash the codes) — only a
-  // collection RECREATE (new dataset semantics) invalidates them.
-
-  private def pqRoot(name: String): java.io.File =
-    new java.io.File(s"$basePath/.pq/$name/v1")
-
-  // _token identity plumbing shared by every trained artifact (PQ
-  // codebooks, IVF centroids): written AFTER the parquet commit, read
-  // by the cross-session staleness guards; a missing token means the
-  // crash window between the two writes — loaders treat it as invalid
-  private def writeToken(dir: java.io.File): Unit =
-    java.nio.file.Files.write(new java.io.File(dir, "_token").toPath,
-      java.util.UUID.randomUUID().toString.getBytes("UTF-8")): Unit
-
-  private def readToken(dir: java.io.File): Option[String] = {
-    val f = new java.io.File(dir, "_token")
-    if (!f.isFile) None
-    else Some(new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8"))
-  }
-
-  private def persistCodebooks(name: String,
-      cw: Array[Array[Array[Float]]]): Unit = {
-    import spark.implicits._
-    val rows = for {
-      j <- cw.indices
-      c <- cw(j).indices
-    } yield (j, c, cw(j)(c).toSeq)
-    rows.toDF("j", "code", "cw")
-      .coalesce(1).write.mode("overwrite").parquet(pqRoot(name).toString)
-    // identity token beside the parquet (underscore-prefixed — the data
-    // source ignores it): the cross-session staleness check compares a
-    // memoized entry's token against this file, so a recreate (which
-    // deletes the dir) invalidates every session's memo on next lookup
-    writeToken(pqRoot(name))
-  }
-
-  /** The persisted codebooks' identity token — None when absent. */
-  private def cwToken(name: String): Option[String] = readToken(pqRoot(name))
-
-  private def loadPersistedCodebooks(
-      name: String): Option[Array[Array[Array[Float]]]] = {
-    val dir = pqRoot(name)
-    if (!new java.io.File(dir, "_SUCCESS").isFile) return None
-    // _token is written AFTER the parquet commit (persistCodebooks), so
-    // a crash in between leaves valid-looking codebooks with no
-    // identity — a session that loaded them would record no token and
-    // the cross-session staleness guard in codebooksOf would go inert
-    // (a later recreate by another session would silently serve the
-    // old quantizer). Treat the tokenless artifact as invalid: retrain
-    // and re-persist, which mints a fresh token (ADVICE r19).
-    if (cwToken(name).isEmpty) return None
-    import spark.implicits._
-    val rows = spark.read.parquet(dir.toString)
-      .select(col("j"), col("code"), col("cw"))
-      .as[(Int, Int, Array[Float])].collect()
-    if (rows.isEmpty) return None
-    val m = rows.map(_._1).max + 1
-    Some(Array.tabulate(m) { j =>
-      rows.filter(_._1 == j).sortBy(_._2).map(_._3)
-    })
-  }
-
-  /** The collection's Lloyd-trained PQ codebooks: loaded from the
-    * store's persisted copy when present (cold start — zero training),
-    * trained on first-ever use (ONE training per collection lifetime —
-    * [[VectorStore.cwTrainsOf]] counts them) and persisted. Keyed
-    * (store path, collection): one collection's codebooks never serve
-    * another's codes.
-    */
-  def codebooksOf(name: String): Array[Array[Array[Float]]] = {
-    val key = gkey(name)
-    // cross-session staleness guard: a recreate by ANOTHER session
-    // deletes the persisted dir (and its token) — a memo recorded at a
-    // token the disk no longer carries would silently score the new
-    // dataset with the old quantizer, so it is dropped instead
-    val recorded = VectorStore.cwTokenMemo.entries(spark).get(key)
-    if (recorded != null && !cwToken(name).contains(recorded)) {
-      VectorStore.cwMemo.entries(spark).remove(key)
-      VectorStore.cwTokenMemo.entries(spark).remove(key)
-    }
-    val cw = VectorStore.cwMemo.computeIfAbsent(spark, key) {
-      loadPersistedCodebooks(name).getOrElse {
-        VectorStore.bumpTrain(key)
-        val trained = graft.search.Ann.trainPqCodebooks(asIndex(read(name)),
-          VectorStore.PqM, VectorStore.PqCodes, VectorStore.PqIters)
-        persistCodebooks(name, trained)
-        trained
-      }
-    }
-    cwToken(name).foreach(t =>
-      VectorStore.cwTokenMemo.entries(spark).put(key, t): Unit)
-    cw
-  }
+  def codebooksOf(name: String): Array[Array[Array[Float]]] = codebooks.of(name)
 
   /** V3's memory-bounded path: ADC top-k over THIS collection's
     * trained codebooks — the Faiss IndexPQ serve beside [[search]]'s
-    * exact scan and [[graphSearch]]'s graph walk, composing the same
-    * per-collection artifact discipline (train once, persist with the
-    * store, serve cold).
+    * exact scan and [[graphSearch]]'s graph walk.
     */
   def searchCompressed(name: String, queries: DataFrame, k: Int): DataFrame =
-    graft.search.Ann.pqTopKWith(asIndex(read(name)), queries, k,
-        VectorStore.PqM, codebooksOf(name))
+    Ann.pqTopKWith(asIndex(read(name)), queries, k, PqM, codebooksOf(name))
       .select(col("query_id"), col("rank"), col("vec_id").as("id"))
 
-  // ---- persisted per-collection IVF centroids (VERDICT r19 #5) ------
-  //
-  // The coarse quantizer is the store's third trained artifact: same
-  // lifecycle as the PQ codebooks (train once per collection lifetime,
-  // persist under `.ivf/<name>/v1/` with a `_token` identity, cold
-  // load bit-exact, upsert/delete keep — the Faiss train-once
-  // contract — recreate retrains).
-
-  private def ivfRoot(name: String): java.io.File =
-    new java.io.File(s"$basePath/.ivf/$name/v1")
-
-  private def persistCentroids(name: String,
-      cents: Array[Array[Float]]): Unit = {
-    import spark.implicits._
-    cents.zipWithIndex.map { case (v, i) => (i.toLong, v.toSeq) }
-      .toSeq.toDF("cent_id", "cvec")
-      .coalesce(1).write.mode("overwrite").parquet(ivfRoot(name).toString)
-    writeToken(ivfRoot(name))
-  }
-
-  private def ivfToken(name: String): Option[String] = readToken(ivfRoot(name))
-
-  private def loadPersistedCentroids(
-      name: String): Option[Array[Array[Float]]] = {
-    val dir = ivfRoot(name)
-    if (!new java.io.File(dir, "_SUCCESS").isFile) return None
-    // the loadPersistedCodebooks crash-window rule: a tokenless
-    // artifact must retrain, or the staleness guard goes inert
-    if (ivfToken(name).isEmpty) return None
-    import spark.implicits._
-    val rows = spark.read.parquet(dir.toString)
-      .select(col("cent_id"), col("cvec"))
-      .as[(Long, Array[Float])].collect()
-    if (rows.isEmpty) None
-    else Some(rows.sortBy(_._1).map(_._2))
-  }
-
-  /** The collection's Lloyd-trained IVF centroids: persisted-or-train-
-    * once per collection lifetime ([[VectorStore.ivfTrainsOf]] counts),
-    * cross-session staleness guarded by the `_token` identity exactly
-    * like [[codebooksOf]].
+  /** The collection's Lloyd-trained IVF centroids — one training per
+    * collection lifetime ([[VectorStore.ivfTrainsOf]] counts them).
     */
-  def centroidsOf(name: String): Array[Array[Float]] = {
-    val key = gkey(name)
-    val recorded = VectorStore.ivfTokenMemo.entries(spark).get(key)
-    if (recorded != null && !ivfToken(name).contains(recorded)) {
-      VectorStore.ivfMemo.entries(spark).remove(key)
-      VectorStore.ivfTokenMemo.entries(spark).remove(key)
-    }
-    val cents = VectorStore.ivfMemo.computeIfAbsent(spark, key) {
-      loadPersistedCentroids(name).getOrElse {
-        VectorStore.bumpIvfTrain(key)
-        import spark.implicits._
-        val trained = graft.search.Ann.trainCentroids(asIndex(read(name)),
-            VectorStore.IvfCells, VectorStore.IvfIters)
-          .orderBy(col("cent_id"))
-          .select(col("cvec")).as[Array[Float]].collect()
-        persistCentroids(name, trained)
-        trained
-      }
-    }
-    ivfToken(name).foreach(t =>
-      VectorStore.ivfTokenMemo.entries(spark).put(key, t): Unit)
-    cents
-  }
+  def centroidsOf(name: String): Array[Array[Float]] = centroids.of(name)
 
-  /** V3's cell-probed path: IVF top-k over THIS collection's trained,
-    * persisted centroids — the Faiss IndexIVFFlat serve beside
-    * [[search]]/[[graphSearch]]/[[searchCompressed]], same train-once/
-    * cold-load artifact discipline.
+  /** V3's cell-probed path: IVF top-k over THIS collection's trained
+    * centroids — the Faiss IndexIVFFlat serve.
     */
   def ivfSearch(name: String, queries: DataFrame, k: Int,
-      nprobe: Int = VectorStore.IvfNprobe): DataFrame = {
+      nprobe: Int = IvfNprobe): DataFrame = {
     import spark.implicits._
     val cents = centroidsOf(name).zipWithIndex
       .map { case (v, i) => (i.toLong, v) }
       .toSeq.toDF("cent_id", "cvec")
-    graft.search.Ann.ivfTopK(asIndex(read(name)), queries, cents, k, nprobe)
+    Ann.ivfTopK(asIndex(read(name)), queries, cents, k, nprobe)
       .select(col("query_id"), col("rank"), col("vec_id").as("id"))
   }
 
-  // ---- persisted per-collection PQ code rows + maxsim serve ---------
-  //
-  // The compressed token index (VERDICT r19 #6): code rows derive from
-  // the collection CONTENTS and the trained CODEBOOKS, so the artifact
-  // dir stamps both identities — any data mutation or quantizer
-  // retrain re-encodes on next use (one narrow pass), and a fresh
-  // session cold-loads with zero encodes.
-
-  private def codesRoot(name: String): java.io.File =
-    new java.io.File(s"$basePath/.codes/$name")
-
-  private def codesStamp(name: String): String =
-    collStamp(name) + "-" + cwToken(name).map(_.take(8)).getOrElse("none")
-
-  private def codesDir(name: String): String =
-    new java.io.File(codesRoot(name), s"v1-${codesStamp(name)}").toString
-
-  private def pruneCodesDirs(name: String, keep: Option[String]): Unit = {
-    val kids = Option(codesRoot(name).listFiles()).getOrElse(Array.empty)
-    kids.filter(d => !keep.contains(d.toString)).foreach(rmTree)
-  }
-
-  /** The collection's PQ code rows (id, codes int[m]) — encoded once
-    * per (contents, codebooks) version via [[graft.search.Ann
-    * .pqEncodeFrame]], persisted beside the data, served from the
-    * artifact scan ([[VectorStore.codesEncodesOf]] counts encodes).
+  /** The collection's PQ code rows (id, codes int[m]) via
+    * [[graft.search.Ann.pqEncodeFrame]] — one encode per (contents,
+    * codebooks) version ([[VectorStore.codesEncodesOf]] counts them).
     */
   def codesOf(name: String): DataFrame = {
-    val key = gkey(name)
-    val cw = codebooksOf(name) // resolves/loads the quantizer first
-    val cur = codesStamp(name)
-    val recorded = VectorStore.codesStampMemo.entries(spark).get(key)
-    if (recorded != null && recorded != cur)
-      VectorStore.codesMemo.drop(spark, key)
-    val codes = VectorStore.codesMemo.computeIfAbsent(spark, key) {
-      val dir = new java.io.File(codesDir(name))
-      if (new java.io.File(dir, "_SUCCESS").isFile)
-        spark.read.parquet(dir.toString)
-      else {
-        VectorStore.bumpEncode(key)
-        graft.search.Ann.pqEncodeFrame(asIndex(read(name)),
-          VectorStore.PqM, cw)
-          .write.mode("overwrite").parquet(dir.toString)
-        pruneCodesDirs(name, keep = Some(dir.toString))
-        spark.read.parquet(dir.toString)
-      }
-    }
-    VectorStore.codesStampMemo.entries(spark).put(key, cur): Unit
-    codes
+    codebooksOf(name) // the code stamp carries the quantizer's token
+    codes.of(name)
   }
 
   /** Late-interaction (ColBERT-style) serve as a STORE API — the
@@ -707,10 +481,8 @@ class VectorStore(spark: SparkSession, basePath: String) {
     val tokQ = queryTokens.select(
       (col("query_id").cast("long") * t + col("qt")).as("query_id"),
       col("qvec"))
-    val cands = graft.search.NnGraph.graphTopKAdc(codesOf(name),
-        graphOf(name), tokQ, VectorStore.MaxsimCandTok,
-        VectorStore.BeamWidth, VectorStore.BeamIters, VectorStore.NndSample,
-        codebooksOf(name))
+    val cands = NnGraph.graphTopKAdc(codesOf(name), graphOf(name), tokQ,
+        MaxsimCandTok, BeamWidth, BeamIters, NndSample, codebooksOf(name))
       .select(expr(s"query_id div $t").as("query_id"),
         expr(s"vec_id div $t").as("doc_id"))
       .distinct()
@@ -718,176 +490,104 @@ class VectorStore(spark: SparkSession, basePath: String) {
       col("id").as("vec_id"), col("embedding"))
     val qtok = queryTokens.select(col("query_id").cast("long"),
       col("qt"), col("qvec"))
-    graft.search.Knn.maxsimTopKCandidates(docs, qtok, cands, k, t)
+    Knn.maxsimTopKCandidates(docs, qtok, cands, k, t)
       .select(col("query_id"), col("rank"), col("doc_id"))
   }
 
   /** Read one collection (partition-pruned). */
   def read(collection: String): DataFrame =
-    spark.read.parquet(s"$basePath/collection=$collection")
+    spark.read.parquet(liveDir(collection).toString)
 
-  /** V4: drop a collection. Also forgets any graph artifact (a stale
-    * graph must never serve a recreated collection); the internal
-    * write-to-temp swaps pass `dropGraph = false` — their callers
-    * maintain the artifact incrementally instead.
+  /** V4: drop a collection and every artifact over it (a stale graph
+    * must never serve a recreated collection).
     */
-  def deleteCollection(name: String, dropGraph: Boolean = true): Unit = {
-    val dir = new java.io.File(s"$basePath/collection=$name")
-    if (dir.exists) rmTree(dir)
-    if (dropGraph) dropAllArtifacts(name)
+  def deleteCollection(name: String): Unit = {
+    DirSwap.recover(liveDir(name), freshDir(name))
+    DirSwap.rmTree(liveDir(name))
+    dropAllArtifacts(name)
+  }
+
+  /** Rewrite the collection in place: `write` fills the fresh copy, the
+    * crash-safe swap installs it (a concurrent reader sees the old
+    * layout or the new one, never a mix), and every graph artifact
+    * current for the pre-mutation contents — this session's memo or
+    * the persisted copy, so a fresh session maintains instead of
+    * orphaning it — is carried across by `carry(graph, edges, dir)`,
+    * which writes the updated artifact at `dir` under the
+    * post-mutation stamp. Never a rebuild, never another collection's
+    * artifact.
+    */
+  private def rewrite[T](name: String)(write: String => T)(
+      carry: (Graph, DataFrame, String) => DataFrame): T = {
+    DirSwap.recover(liveDir(name), freshDir(name))
+    val pre = collStamp(name)
+    val shardRe = (s"^v${GraphArtifactVersion}s(\\d+)-" +
+      java.util.regex.Pattern.quote(pre) + "$").r
+    val shardCounts = Option(graph.root(name).list()).getOrElse(Array.empty)
+      .flatMap(n => shardRe.findFirstMatchIn(n).map(_.group(1).toInt)).sorted
+    val toMaintain = (graph +: shardCounts.toSeq.map(s => new Graph(Some(s))))
+      .flatMap(g => g.current(name, pre).map(g -> _))
+    val out = write(freshDir(name).toString)
+    DirSwap.install(liveDir(name), freshDir(name))
+    val post = collStamp(name)
+    toMaintain.foreach { case (g, edges) =>
+      val carried = carry(g, edges, g.dir(name, post).toString)
+      g.pruneExcept(name, post)
+      g.commit(name, post, carried)
+    }
+    out
   }
 
   /** Point-level DELETE within a collection — the other half of the
     * reference store's maintenance contract (Qdrant deletes points
     * without dropping the collection; the repo's V4 above is the
-    * collection-level drop): rewrite the partition without the
-    * tombstoned ids via write-to-temp + atomic swap (the [[compact]]
-    * discipline — a concurrent reader sees the old layout or the new
-    * one, never a mix). Returns the number of points actually removed
-    * (absent ids are not an error — the idempotent-delete convention).
-    * `ids` rides the filter closure — point deletes are small batches
-    * by contract (a retention pass with corpus-scale tombstones should
-    * anti-join a frame instead). A graph-ANN index over the collection
-    * repairs incrementally via
-    * [[graft.search.NnGraph.deleteFromGraph]] rather than rebuilding.
+    * collection-level drop). Returns the number of points actually
+    * removed (absent ids are not an error — the idempotent-delete
+    * convention). `ids` rides the filter closure — point deletes are
+    * small batches by contract (a retention pass with corpus-scale
+    * tombstones should anti-join a frame instead). Graph artifacts
+    * repair by tombstone + bridge ([[graft.search.NnGraph
+    * .deleteFromGraph]], shard-preserving by construction).
     */
-  /** The graph artifact to MAINTAIN across a data mutation, looked up
-    * BEFORE the swap: the session memo if it holds one, else the
-    * persisted artifact stamped for the pre-mutation contents — so a
-    * fresh session's upsert/delete still maintains incrementally
-    * instead of orphaning the persisted graph (whose stamp the swap is
-    * about to invalidate). Carries the SAME cross-session staleness
-    * guard as [[graphOf]] (ADVICE r19): a memo resolved at a different
-    * stamp means another session mutated the collection (and pruned
-    * the artifact dir the memoized frame scans) — serving it here
-    * would run maintenance jobs over deleted files and throw AFTER the
-    * data rename already committed; drop it and fall back to the
-    * persisted artifact stamped for the current pre-mutation contents.
-    */
-  private def graphToMaintain(name: String): Option[DataFrame] = {
-    val key = gkey(name)
-    val recorded = VectorStore.graphStampMemo.entries(spark).get(key)
-    if (recorded != null && recorded != collStamp(name))
-      VectorStore.graphMemo.drop(spark, key)
-    VectorStore.graphMemo.peek(spark, key)
-      .orElse(loadPersistedGraph(name))
-  }
-
   def deletePoints(name: String, ids: Seq[Long]): Long = {
-    val src = s"$basePath/collection=$name"
-    val tmp = s"$basePath/.delete-$name"
-    val df = spark.read.parquet(src)
-    val before = df.count()
-    val kept = df.filter(!col("id").isin(ids: _*))
-    val preGraph = graphToMaintain(name)
-    val preSharded = shardedToMaintain(name)
-    kept.write.mode("overwrite").parquet(tmp)
-    val after = spark.read.parquet(tmp).count()
-    deleteCollection(name, dropGraph = false)
-    if (!new java.io.File(tmp).renameTo(new java.io.File(src)))
-      throw new java.io.IOException(s"deletePoints: rename failed for $name")
-    // graph maintenance: if this collection serves a graph artifact
-    // (memoized or persisted), tombstone + bridge-repair it
-    // (NnGraph.deleteFromGraph) — never rebuild. The post-swap read IS
-    // the survivor table the repair scores against, and the repaired
-    // artifact lands under the post-swap stamp for cold-start serving.
-    preGraph.foreach { g =>
-      import spark.implicits._
-      val del = ids.toDF("vec_id")
-      val dir = stampDir(name)
-      val updated = NnGraph.deleteFromGraph(asIndex(read(name)), g, del,
-        VectorStore.GraphK, artifactDir = Some(dir))
-      pruneGraphDirs(name, keep = Some(dir), prefix = monoPrefix)
-      VectorStore.graphMemo.put(spark, gkey(name))(updated)
-      VectorStore.graphStampMemo.entries(spark)
-        .put(gkey(name), collStamp(name)): Unit
+    import spark.implicits._
+    rewrite(name) { fresh =>
+      val df = read(name)
+      val before = df.count()
+      df.filter(!col("id").isin(ids: _*)).write.mode("overwrite").parquet(fresh)
+      before - spark.read.parquet(fresh).count()
+    } { (_, g, dir) =>
+      NnGraph.deleteFromGraph(asIndex(read(name)), g, ids.toDF("vec_id"),
+        GraphK, artifactDir = Some(dir))
     }
-    // sharded artifacts repair the same way — deleteFromGraph is
-    // shard-preserving by construction (tombstone drops in-shard
-    // edges, the bridge joins in-shard pairs, the repair round
-    // proposes neighbors-of-neighbors — NnGraphSpec pins it)
-    preSharded.foreach { case (s, g) =>
-      import spark.implicits._
-      val del = ids.toDF("vec_id")
-      val dir = shardedStampDir(name, s)
-      val updated = NnGraph.deleteFromGraph(asIndex(read(name)), g, del,
-        VectorStore.GraphK, artifactDir = Some(dir))
-      pruneGraphDirs(name, keep = Some(dir), prefix = shardPrefix(s))
-      VectorStore.graphMemo.put(spark, skey(name, s))(updated)
-      VectorStore.graphStampMemo.entries(spark)
-        .put(skey(name, s), collStamp(name)): Unit
-    }
-    before - after
   }
 
   /** Point-level UPSERT within a collection (Qdrant upsert semantics,
     * vector_db.py:60-91: same-id points are REPLACED, new ids are
     * added). `rows` must carry the collection's columns including `id`;
     * the anti-join keeps every existing point whose id is not being
-    * replaced. Same write-to-temp + atomic-swap discipline as
-    * [[deletePoints]].
+    * replaced. Graph artifacts update as HNSW does (delete + insert):
+    * tombstone every upserted id (tombstoning an absent id is a no-op),
+    * then search-then-connect all upserted rows as new nodes — in-shard
+    * for a sharded graph.
     */
-  def upsertPoints(name: String, rows: DataFrame): Unit = {
-    val src = s"$basePath/collection=$name"
-    val tmp = s"$basePath/.upsert-$name"
-    val existing = spark.read.parquet(src)
-    val preGraph = graphToMaintain(name)
-    val preSharded = shardedToMaintain(name)
-    existing.join(rows.select(col("id")), Seq("id"), "left_anti")
-      .unionByName(rows.select(existing.columns.map(col).toIndexedSeq: _*))
-      .write.mode("overwrite").parquet(tmp)
-    deleteCollection(name, dropGraph = false)
-    if (!new java.io.File(tmp).renameTo(new java.io.File(src)))
-      throw new java.io.IOException(s"upsertPoints: rename failed for $name")
-    // graph maintenance (HNSW update = delete + insert): tombstone
-    // every upserted id (replaced points forget their stale edges;
-    // tombstoning an absent id is a no-op), then insert all upserted
-    // rows as new nodes via search-then-connect — never a rebuild, and
-    // never another collection's artifact. The intermediate tombstoned
-    // graph is session scratch; only the FINAL inserted artifact
-    // persists, under the post-swap stamp (cold-start serving).
-    preGraph.foreach { g =>
-      val upIds = rows.select(col("id").as("vec_id"))
-      val g1 = NnGraph.deleteFromGraph(asIndex(read(name)), g, upIds,
-        VectorStore.GraphK)
-      val base = read(name)
-        .join(rows.select(col("id")), Seq("id"), "left_anti")
-      val dir = stampDir(name)
-      val updated = NnGraph.insertIntoGraph(asIndex(base), g1,
-        rows.select(col("id").as("vec_id"), col("embedding")),
-        VectorStore.GraphK, VectorStore.BeamWidth,
-        VectorStore.BeamIters, VectorStore.NndSample,
-        artifactDir = Some(dir))
-      pruneGraphDirs(name, keep = Some(dir), prefix = monoPrefix)
-      VectorStore.graphMemo.put(spark, gkey(name))(updated)
-      VectorStore.graphStampMemo.entries(spark)
-        .put(gkey(name), collStamp(name)): Unit
+  def upsertPoints(name: String, rows: DataFrame): Unit =
+    rewrite(name) { fresh =>
+      val existing = read(name)
+      existing.join(rows.select(col("id")), Seq("id"), "left_anti")
+        .unionByName(rows.select(existing.columns.map(col).toIndexedSeq: _*))
+        .write.mode("overwrite").parquet(fresh)
+    } { (gr, g, dir) =>
+      val tombstoned = NnGraph.deleteFromGraph(asIndex(read(name)), g,
+        rows.select(col("id").as("vec_id")), GraphK)
+      val base = read(name).join(rows.select(col("id")), Seq("id"), "left_anti")
+      gr.insert(asIndex(base), tombstoned,
+        rows.select(col("id").as("vec_id"), col("embedding")), dir)
     }
-    // sharded artifacts: tombstone (shard-preserving), then the
-    // SHARD-RESTRICTED insert — each upserted row search-then-connects
-    // within its own shard only, keeping every edge in-shard
-    preSharded.foreach { case (s, g) =>
-      val upIds = rows.select(col("id").as("vec_id"))
-      val g1 = NnGraph.deleteFromGraph(asIndex(read(name)), g, upIds,
-        VectorStore.GraphK)
-      val base = read(name)
-        .join(rows.select(col("id")), Seq("id"), "left_anti")
-      val dir = shardedStampDir(name, s)
-      val updated = NnGraph.insertIntoShardedGraph(asIndex(base), g1,
-        rows.select(col("id").as("vec_id"), col("embedding")), s,
-        VectorStore.GraphK, VectorStore.BeamWidth,
-        VectorStore.BeamIters, VectorStore.NndSample,
-        artifactDir = Some(dir))
-      pruneGraphDirs(name, keep = Some(dir), prefix = shardPrefix(s))
-      VectorStore.graphMemo.put(spark, skey(name, s))(updated)
-      VectorStore.graphStampMemo.entries(spark)
-        .put(skey(name, s), collStamp(name)): Unit
-    }
-  }
 
   /** V5: list collections (catalog listing / SHOW PARTITIONS analog). */
   def collectionNames(): Seq[String] = {
-    val base = new java.io.File(basePath)
+    val base = new File(basePath)
     if (!base.exists) Seq.empty
     else base.listFiles.filter(_.isDirectory).map(_.getName)
       .filter(_.startsWith("collection=")).map(_.stripPrefix("collection="))
@@ -900,49 +600,20 @@ class VectorStore(spark: SparkSession, basePath: String) {
     * many small files, and scan throughput collapses when file count
     * dwarfs the data (footer reads + task-per-file scheduling dominate).
     * Rewrites the partition at `targetRows` rows per file via an
-    * explicit repartition; write-to-temp then atomic directory swap, so
-    * a concurrent reader sees the old layout or the new one, never a
-    * half-written mix. Contents are preserved row-for-row (spec-checked
-    * by full-frame comparison); only the file layout changes.
+    * explicit repartition. Contents are preserved row-for-row
+    * (spec-checked by full-frame comparison); only the file layout
+    * changes, so graph artifacts stay valid and are re-persisted under
+    * the new stamp (a small edge-table copy, never a rebuild).
     */
-  def compact(name: String, targetRows: Long): Unit = {
-    val src = s"$basePath/collection=$name"
-    val tmp = s"$basePath/.compact-$name"
-    val df = spark.read.parquet(src)
-    val n = df.count()
-    val files = math.max(1, math.ceil(n.toDouble / targetRows).toInt)
-    val preGraph = graphToMaintain(name)
-    val preSharded = shardedToMaintain(name)
-    df.repartition(files).write.mode("overwrite").parquet(tmp)
-    // layout-only rewrite: contents are row-identical, so any graph
-    // artifact stays valid — keep it
-    deleteCollection(name, dropGraph = false)
-    if (!new java.io.File(tmp).renameTo(new java.io.File(src)))
-      throw new java.io.IOException(s"compact: rename failed for $name")
-    // ... but the content stamp keys on the FILE LAYOUT (names +
-    // lengths — the cheap evidence that catches every data mutation),
-    // which compaction changes by design: re-persist the still-valid
-    // edges under the post-compaction stamp so cold-start serving
-    // survives a compaction pass (a small edge-table copy, never a
-    // rebuild).
-    preGraph.foreach { g =>
-      val dir = stampDir(name)
+  def compact(name: String, targetRows: Long): Unit =
+    rewrite(name) { fresh =>
+      val df = read(name)
+      val files = math.max(1, math.ceil(df.count().toDouble / targetRows).toInt)
+      df.repartition(files).write.mode("overwrite").parquet(fresh)
+    } { (_, g, dir) =>
       g.write.mode("overwrite").parquet(dir)
-      pruneGraphDirs(name, keep = Some(dir), prefix = monoPrefix)
-      VectorStore.graphMemo.put(spark, gkey(name))(spark.read.parquet(dir))
-      VectorStore.graphStampMemo.entries(spark)
-        .put(gkey(name), collStamp(name)): Unit
+      spark.read.parquet(dir)
     }
-    preSharded.foreach { case (s, g) =>
-      val dir = shardedStampDir(name, s)
-      g.write.mode("overwrite").parquet(dir)
-      pruneGraphDirs(name, keep = Some(dir), prefix = shardPrefix(s))
-      VectorStore.graphMemo.put(spark, skey(name, s))(
-        spark.read.parquet(dir))
-      VectorStore.graphStampMemo.entries(spark)
-        .put(skey(name, s), collStamp(name)): Unit
-    }
-  }
 
   /** V6: per-collection info: point count + dim + distance metric
     * (vector_db.py:138-150; the store is cosine-only, as is the

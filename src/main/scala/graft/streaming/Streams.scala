@@ -367,58 +367,22 @@ object Streams extends Serializable {
       val persisted: Option[DataFrame] = screenDir.flatMap { d =>
         val bd = new java.io.File(d, "bands")
         val tmp = new java.io.File(d, ".bands-compact")
-        val old = new java.io.File(d, ".bands-old")
-        def rm(f: java.io.File): Unit = {
-          if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-          f.delete(): Unit
-        }
-        def hasParts(f: java.io.File): Boolean =
-          Option(f.listFiles()).getOrElse(Array.empty)
-            .exists(_.getName.startsWith("part-"))
-        def complete(f: java.io.File): Boolean =
-          hasParts(f) && new java.io.File(f, "_SUCCESS").exists()
-        // CRASH RECOVERY (ADVICE r20, medium): the compaction swap below
-        // renames the live table ASIDE before installing the compacted
-        // copy, so a crash at any point leaves at least one complete
-        // table on disk. If `bands` is missing, a completed compacted
-        // copy (part- files + _SUCCESS) is the same state deduped —
-        // adopt it; otherwise the set-aside original is authoritative
-        // (a tmp without _SUCCESS is a partial write and is discarded).
-        // No window exists in which every persisted band is lost.
-        if (!hasParts(bd)) {
-          if (complete(tmp)) { rm(bd); if (!tmp.renameTo(bd))
-            throw new java.io.IOException(
-              s"ingest screen: band crash-recovery rename failed under $d")
-            rm(old)
-          } else if (hasParts(old)) { rm(bd); if (!old.renameTo(bd))
-            throw new java.io.IOException(
-              s"ingest screen: band crash-recovery rename failed under $d")
-            rm(tmp)
-          }
-        } else { rm(old); rm(tmp) } // live table present — clear leftovers
+        // finish or roll back a compaction swap (below) a crash
+        // interrupted, before the live table is read
+        graft.DirSwap.recover(bd, tmp)
         val parts = Option(bd.listFiles()).getOrElse(Array.empty)
           .filter(_.getName.startsWith("part-"))
         if (parts.isEmpty) None
         else {
           // small-files hygiene: per-batch appends leave ~one file per
           // kept batch; past 32 files a (re)start compacts the table
-          // (write-to-temp, rename the live table ASIDE, install, then
-          // drop the old copy — never delete-then-rename: a crash
-          // between those two destroyed ALL persisted screen state and
-          // silently re-ingested near-dups on the next start), so
-          // restart seeding never pays task-per-file scheduling that
-          // dwarfs the band data
+          // through the crash-safe swap, so restart seeding never pays
+          // task-per-file scheduling that dwarfs the band data
           if (parts.length > 32) {
             spark0.read.parquet(bd.toString)
               .select(col("band").cast("int"), col("bkey")).distinct()
               .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-            if (!bd.renameTo(old))
-              throw new java.io.IOException(
-                s"ingest screen: band compaction set-aside rename failed under $d")
-            if (!tmp.renameTo(bd))
-              throw new java.io.IOException(
-                s"ingest screen: band compaction rename failed under $d")
-            rm(old)
+            graft.DirSwap.install(bd, tmp)
           }
           Some(spark0.read.parquet(bd.toString))
         }

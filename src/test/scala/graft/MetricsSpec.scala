@@ -63,5 +63,18 @@ class MetricsSpec extends SparkSpec {
     assert(r.getAs[Double]("mrr") == 0.25)
     assert(r.getAs[Long]("num_queries") == 2)
     assert(r.getAs[Double]("combined_score") == 0.75)
+
+    // scores one ulp apart (summation-order noise) tie: the
+    // (strategy, model) tie-break orders them, and combined_score keeps
+    // its exact value
+    val noisy = Seq(
+      ("b", "m", 0.0, 0.0, math.nextUp(0.75), 0.0, 2L),
+      ("a", "m", 0.0, 0.0, 0.75, 0.0, 2L),
+    ).toDF("strategy", "model", "top_1_accuracy", "top_3_accuracy", "mrr",
+      "avg_similarity", "num_queries")
+    val order = Metrics.ranked(noisy).collect()
+      .map(r => (r.getAs[String]("strategy"), r.getAs[Double]("combined_score")))
+    assert(order.toSeq == Seq(("a", 0.75), ("b", math.nextUp(0.75))),
+      order.toSeq.toString)
   }
 }

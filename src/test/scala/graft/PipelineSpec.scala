@@ -263,6 +263,30 @@ class VectorStoreSpec extends SparkSpec {
     assert(store1.graphSearch("c", q("lambda doc 3"), 3).collect().nonEmpty)
     assert(VectorStore.graphBuildsOf(base, "c") == 2L,
       "session 1 must rebuild for the recreated dataset")
+
+    // the guard holds for EVERY artifact kind: warm session 1's memo for
+    // each, let session 2 recreate, and each kind rebuilds exactly once
+    // (a second lookup is a memo hit; frames are scanned, so a stale
+    // memo over pruned files would throw)
+    val kinds: Seq[(String, VectorStore => Any, () => Long)] = Seq(
+      ("graph", _.graphOf("c").count(),
+        () => VectorStore.graphBuildsOf(base, "c")),
+      ("sharded graph", _.shardedGraphOf("c", 2).count(),
+        () => VectorStore.graphBuildsOf(base, "c#s2")),
+      ("codebooks", _.codebooksOf("c"),
+        () => VectorStore.cwTrainsOf(base, "c")),
+      ("centroids", _.centroidsOf("c"),
+        () => VectorStore.ivfTrainsOf(base, "c")),
+      ("codes", _.codesOf("c").count(),
+        () => VectorStore.codesEncodesOf(base, "c")))
+    kinds.foreach { case (_, resolve, _) => resolve(store1) }
+    val warm = kinds.map(_._3())
+    store2.createCollection("c", rows("xi", 14), "row_order")
+    kinds.foreach { case (_, resolve, _) => resolve(store1); resolve(store1) }
+    kinds.zip(warm).foreach { case ((kind, _, census), w) =>
+      assert(census() == w + 1,
+        s"$kind: ${census() - w} builds after another session's recreate")
+    }
   }
 
   test("cross-session mutation guard covers MAINTENANCE too: upsert after another session's recreate must not touch pruned artifacts") {
@@ -537,6 +561,43 @@ class VectorStoreSpec extends SparkSpec {
       "cold maxsim serve must not retrain the quantizer")
     assert(VectorStore.codesEncodesOf(base, "c") == 1L,
       "cold maxsim serve must not re-encode the code rows")
+  }
+
+  test("crash mid-swap: a new store recovers every crash state of the collection swap") {
+    val base = java.nio.file.Files.createTempDirectory("vstore-crash").toString
+    val m = HashingEmbedder.modelsByName("hash-64")
+    val store = new VectorStore(spark, base)
+    store.createCollection("c", (0 until 20)
+      .map(i => (i.toLong, s"eta doc $i", HashingEmbedder.embed(s"eta doc $i", m)))
+      .toDF("row_order", "content", "embedding"), "row_order")
+    assert(store.deletePoints("c", Seq(3L)) == 1L)
+    val live = new java.io.File(s"$base/collection=c")
+    val aside = DirSwap.aside(live)
+    val fresh = new java.io.File(s"$base/.collection=c-new")
+    def ids(s: VectorStore) = s.read("c").select("id").as[Long].collect().toSet
+    val full = ids(store)
+    assert(full == (0L until 20L).toSet - 3L)
+
+    // installed, old copy not yet dropped: the live copy serves
+    store.read("c").write.parquet(aside.toString)
+    assert(ids(new VectorStore(spark, base)) == full)
+    assert(!aside.exists, "recovery must drop the set-aside copy")
+
+    // set aside, fresh copy only partly written: the aside copy returns
+    fresh.mkdirs()
+    java.nio.file.Files.write(
+      new java.io.File(fresh, "part-00000-partial.parquet").toPath,
+      Array[Byte](1, 2, 3))
+    assert(live.renameTo(aside))
+    assert(ids(new VectorStore(spark, base)) == full)
+    assert(!aside.exists && !fresh.exists)
+
+    // set aside, fresh copy complete — here every point deleted, which
+    // _SUCCESS still marks complete: the fresh copy is installed
+    store.read("c").filter(lit(false)).write.parquet(fresh.toString)
+    assert(live.renameTo(aside))
+    assert(ids(new VectorStore(spark, base)).isEmpty)
+    assert(!aside.exists && !fresh.exists)
   }
 
   test("compact rewrites the file layout without changing a row") {
