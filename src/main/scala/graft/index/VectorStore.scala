@@ -256,12 +256,21 @@ class VectorStore(spark: SparkSession, basePath: String) {
     }
   }
 
+  /** Frame-valued artifacts: the session value lives in `frames`. */
+  private abstract class Framed(kind: String, dirName: String)
+      extends Artifact[DataFrame](kind, dirName) {
+    override protected def recall(k: ArtKey, value: AnyRef) = frames.peek(spark, k)
+    override protected def remember(k: ArtKey, v: DataFrame): AnyRef = {
+      frames.put(spark, k)(v); null
+    }
+  }
+
   /** Frame artifacts stamped by content: persisted at
     * `root/<prefix><identity>/`; prefix-scoped pruning lets variants
     * (the monolithic graph, each shard count) coexist under one root.
     */
   private abstract class Stamped(kind: String, dirName: String, prefix: String)
-      extends Artifact[DataFrame](kind, dirName) {
+      extends Framed(kind, dirName) {
     def dir(name: String, id: String): File = new File(root(name), prefix + id)
     /** Build into `dir`; returns the frame serving the written copy. */
     protected def write(name: String, dir: String): DataFrame
@@ -282,11 +291,6 @@ class VectorStore(spark: SparkSession, basePath: String) {
       Option(root(name).listFiles()).getOrElse(Array.empty)
         .filter(d => d.getName.startsWith(prefix) && d != dir(name, id))
         .foreach(DirSwap.rmTree)
-
-    override protected def recall(k: ArtKey, value: AnyRef) = frames.peek(spark, k)
-    override protected def remember(k: ArtKey, v: DataFrame): AnyRef = {
-      frames.put(spark, k)(v); null
-    }
   }
 
   /** The NN-descent graph: monolithic, or `shards` independent in-shard
@@ -386,6 +390,19 @@ class VectorStore(spark: SparkSession, basePath: String) {
     }
   }
 
+  /** The collection's own rows, memoized per content stamp through the
+    * same lifecycle: a call at an unchanged stamp reuses the frame (no
+    * file listing, no schema-inference job), a changed stamp replaces
+    * it. No artifact dir; loading never misses, so nothing builds.
+    */
+  private val rows = new Framed("rows", "") {
+    def identity(name: String) = Some(collStamp(name))
+    def load(name: String, id: String) =
+      Some(spark.read.parquet(liveDir(name).toString))
+    protected def build(name: String, id: Option[String]) =
+      (id.get, load(name, id.get).get)
+  }
+
   // ---- artifact accessors + serves ----------------------------------
 
   /** The collection's NN-descent graph artifact (the [[Artifact]]
@@ -398,10 +415,14 @@ class VectorStore(spark: SparkSession, basePath: String) {
   /** V3's graph-index path: beam search over THIS collection's
     * artifact — the per-collection serving contract of the reference's
     * store (one HNSW per Qdrant collection, src/vector_db.py:22-54).
-    * `queries` carries (query_id, qvec); output (query_id, rank, id).
+    * `queries` carries (query_id, qvec); output (query_id, rank, id),
+    * equal row for row to [[graft.search.NnGraph.graphTopK]] over the
+    * same artifact. The walk runs in ONE Spark job at call time (one
+    * task, every round inside it — [[graft.search.NnGraph.walkServe]])
+    * and the result is returned as a local frame.
     */
   def graphSearch(name: String, queries: DataFrame, k: Int): DataFrame =
-    NnGraph.graphTopK(asIndex(read(name)), graphOf(name), queries, k,
+    NnGraph.walkServe(asIndex(read(name)), graphOf(name), queries, k, 1,
         BeamWidth, BeamIters, NndSample)
       .withColumnRenamed("vec_id", "id")
 
@@ -414,13 +435,17 @@ class VectorStore(spark: SparkSession, basePath: String) {
 
   /** V3's sharded fan-out path: every query walks every shard of THIS
     * collection's sharded artifact and merges per-query top-k — the
-    * Faiss IndexShards serve as a store API.
+    * Faiss IndexShards serve as a store API. One Spark job at call
+    * time, one task per shard residue, returned as a local frame;
+    * any query and point ids, negative ones included (every shard
+    * present is walked, beams key on the real query_id). For
+    * non-negative ids it equals
+    * [[graft.search.NnGraph.shardedGraphTopK]] row for row.
     */
   def graphSearchSharded(name: String, queries: DataFrame, k: Int,
       numShards: Int = 2): DataFrame =
-    NnGraph.shardedGraphTopK(asIndex(read(name)),
-        shardedGraphOf(name, numShards), queries, k, numShards,
-        BeamWidth, BeamIters, NndSample)
+    NnGraph.walkServe(asIndex(read(name)), shardedGraphOf(name, numShards),
+        queries, k, numShards, BeamWidth, BeamIters, NndSample)
       .withColumnRenamed("vec_id", "id")
 
   /** The collection's Lloyd-trained PQ codebooks — one training per
@@ -494,9 +519,8 @@ class VectorStore(spark: SparkSession, basePath: String) {
       .select(col("query_id"), col("rank"), col("doc_id"))
   }
 
-  /** Read one collection (partition-pruned). */
-  def read(collection: String): DataFrame =
-    spark.read.parquet(liveDir(collection).toString)
+  /** Read one collection (partition-pruned), memoized per content stamp. */
+  def read(collection: String): DataFrame = rows.of(collection)
 
   /** V4: drop a collection and every artifact over it (a stale graph
     * must never serve a recreated collection).

@@ -432,8 +432,100 @@ object NnGraph {
     */
   private def driverTop(rows: Array[(Long, Long, Double)],
       k: Int): Array[(Long, Long, Double)] =
-    rows.groupBy(_._1).valuesIterator
-      .flatMap(g => g.sortBy(t => (-t._3, t._2)).take(k)).toArray
+    rows.groupBy(_._1).valuesIterator.flatMap(topOf(_, k)).toArray
+
+  /** One query's (sim DESC, id ASC) top-k — [[driverTop]]'s comparator. */
+  private def topOf(rows: Array[(Long, Long, Double)],
+      k: Int): Array[(Long, Long, Double)] =
+    rows.sortBy(t => (-t._3, t._2)).take(k)
+
+  // ---- the store serve: the whole walk inside one task per shard ----
+
+  /** The beam walk over ONE shard as a pure function — [[graphTopK]]'s
+    * walk without the Spark round trips, the kernel of [[walkServe]].
+    * Inputs are the shard's (vec_id, embedding) rows, its (id, nbr)
+    * adjacency and the query batch (query_id, qvec as double). Per
+    * query: entry beam = the shard's md5-ranked `sampleSize` seeds
+    * ([[seedSample]]'s order) scored and cut to `beamWidth`, then
+    * `iters` rounds of beam ∪ out-neighbors, scored and cut to
+    * `beamWidth`. Every dot is [[dotDD]]'s left-to-right double
+    * accumulation and every cut the (sim DESC, vec_id ASC) comparator,
+    * so the final beam is bit-identical to the DataFrame walk's.
+    * Returns each query's final beam (query_id, vec_id, sim).
+    */
+  private def walkShard(vecs: Array[(Long, Array[Float])],
+      edges: Array[(Long, Long)], queries: Array[(Long, Array[Double])],
+      beamWidth: Int, iters: Int,
+      sampleSize: Int): Array[(Long, Long, Double)] = {
+    val vec = scala.collection.mutable.LongMap.empty[Array[Double]]
+    vecs.foreach { case (id, v) => vec(id) = v.map(_.toDouble) }
+    val out = edges.groupBy(_._1).map { case (id, es) => id -> es.map(_._2) }
+    val md = java.security.MessageDigest.getInstance("MD5")
+    val hex = java.util.HexFormat.of()
+    val seeds = vecs.map { case (id, _) =>
+        (hex.formatHex(md.digest(s"nnd|$id".getBytes("UTF-8"))), id)
+      }.sorted.take(sampleSize).map(_._2)
+    queries.flatMap { case (qid, qv) =>
+      def scored(ids: Array[Long]) = ids.map(id => (qid, id, dotDD(qv, vec(id))))
+      var beam = topOf(scored(seeds), beamWidth)
+      for (_ <- 1 to iters) {
+        val ids = beam.map(_._2)
+        beam = topOf(scored((ids ++ ids.flatMap(out.getOrElse(_, Array.empty[Long])))
+          .distinct.filter(vec.contains)), beamWidth)
+      }
+      beam
+    }
+  }
+
+  /** Graph serve in ONE Spark job: [[walkShard]] runs once per shard
+    * inside a task — the query batch rides the task closure — and the
+    * per-query top-k over the shards' final beams merges on the driver
+    * (≤ shards × beamWidth rows per query). `numShards = 1` is the
+    * monolithic graph: index and graph coalesce into one task, no
+    * shuffle. Otherwise index and graph rows are partitioned by shard
+    * (signed `vec_id % numShards`, the build's membership — negative
+    * ids live in negative shards, and every shard present is walked),
+    * one task per shard residue. Each shard is scanned once per read,
+    * whatever `iters` is; per-task memory is one shard's vectors plus
+    * its adjacency. Output is computed at call time and returned as a
+    * local frame (query_id, rank, vec_id), equal row for row to
+    * [[graphTopK]] (one shard) or [[shardedGraphTopK]] (non-negative
+    * ids).
+    */
+  private[graft] def walkServe(index: DataFrame, graph: DataFrame,
+      queries: DataFrame, k: Int, numShards: Int, beamWidth: Int,
+      iters: Int, sampleSize: Int): DataFrame = {
+    val spark = index.sparkSession
+    import spark.implicits._
+    val qs = queries.select(col("query_id").cast("long"),
+        col("qvec").cast("array<double>"))
+      .as[(Long, Array[Double])].collect().sortBy(_._1)
+    val vecs = index.select(col("vec_id").cast("long"), col("embedding"))
+      .as[(Long, Array[Float])].rdd
+    val edges = graph.select(col("id"), col("nbr")).as[(Long, Long)].rdd
+    val nS = numShards.toLong
+    val beams: Array[(Long, Long, Double)] =
+      if (qs.isEmpty) Array.empty
+      else {
+        val (vs, es) = if (numShards == 1) (vecs.coalesce(1), edges.coalesce(1))
+        else {
+          val p = new org.apache.spark.HashPartitioner(numShards)
+          (vecs.keyBy(t => Math.floorMod(t._1, nS)).partitionBy(p).values,
+            edges.keyBy(t => Math.floorMod(t._1, nS)).partitionBy(p).values)
+        }
+        vs.zipPartitions(es) { (vi, ei) =>
+          val adj = ei.toArray.groupBy(_._1 % nS)
+          vi.toArray.groupBy(_._1 % nS).iterator.flatMap { case (sh, v) =>
+            walkShard(v, adj.getOrElse(sh, Array.empty), qs, beamWidth,
+              iters, sampleSize)
+          }
+        }.collect()
+      }
+    val ranked = beams.groupBy(_._1).toSeq.flatMap { case (qid, rows) =>
+      topOf(rows, k).zipWithIndex.map { case (t, i) => (qid, i + 1, t._2) }
+    }.sortBy(t => (t._1, t._2))
+    spark.createDataset(ranked).toDF("query_id", "rank", "vec_id")
+  }
 
   /** Fully-materialized navigation: walks exactly like [[beamWithSims]]
     * but collects every round's SCORED candidate set on the driver —
@@ -1043,9 +1135,9 @@ object NnGraph {
     // normalization never matched a negative vec_id's (negative) shard,
     // so such nodes were inserted with an EMPTY entry beam and no
     // out-edges. Shard membership is `vec_id % numShards` with one
-    // consistent signed semantics across build, maintenance and serve;
-    // the fan-out serve additionally requires non-negative ids (its
-    // composite-id space — see shardedGraphTopK's scaladoc).
+    // consistent signed semantics across build, maintenance and serve
+    // (walkServe walks negative shards too; the plan-shaped
+    // shardedGraphTopK still requires non-negative ids — its scaladoc).
     val entry = for {
       (qid, qv) <- qRows
       (sh, sid, sv) <- seedRows

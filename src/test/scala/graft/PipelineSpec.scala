@@ -470,6 +470,35 @@ class VectorStoreSpec extends SparkSpec {
     assert(VectorStore.graphBuildsOf(base, "c#s2") == 2L)
   }
 
+  test("sharded graph serving answers negative query ids and negative point ids") {
+    val base = java.nio.file.Files.createTempDirectory("vstore-negid").toString
+    val m = HashingEmbedder.modelsByName("hash-64")
+    val store = new VectorStore(spark, base)
+    store.createCollection("c", (0 until 300)
+      .map(i => (i.toLong, HashingEmbedder.embed(s"sigma doc $i", m)))
+      .toDF("row_order", "embedding"), "row_order")
+    val v = HashingEmbedder.embed("sigma doc 17 and 18", m)
+    def hits(qid: Long) = store.graphSearchSharded("c",
+        Seq((qid, v), (3L, HashingEmbedder.embed("sigma doc 5", m)))
+          .toDF("query_id", "qvec"), 10)
+      .collect().map(r => (r.getAs[Long]("query_id"), r.getAs[Int]("rank"),
+        r.getAs[Long]("id"))).sortBy(t => (t._1, t._2)).toSeq
+    // query -1 gets both shards' beams, exactly as the same query under
+    // a non-negative id does, and no other query id appears
+    val neg = hits(-1L)
+    val pos = hits(7L)
+    assert(neg.map(_._1).distinct == Seq(-1L, 3L), neg.toString)
+    assert(neg.filter(_._1 == -1L).map(t => (t._2, t._3)) ==
+      pos.filter(_._1 == 7L).map(t => (t._2, t._3)))
+    assert(neg.filter(_._1 == -1L).exists(_._3 % 2 == 1L))
+    // a point upserted as id -5 lives in shard -1 and is served from it
+    store.upsertPoints("c", Seq((-5L, v, -5L)).toDF("id", "embedding", "row_order"))
+    val q = Seq((0L, v)).toDF("query_id", "qvec")
+    assert(store.search("c", q, 3).orderBy("rank").first().getAs[Long]("id") == -5L)
+    assert(store.graphSearchSharded("c", q, 3).orderBy("rank")
+      .first().getAs[Long]("id") == -5L)
+  }
+
   test("per-collection IVF centroids: train once, serve probed, cold-start load, recreate retrains") {
     val base = java.nio.file.Files.createTempDirectory("vstore-ivf").toString
     val m = HashingEmbedder.modelsByName("hash-64")
